@@ -38,10 +38,13 @@ def _current_round() -> int:
     env = os.environ.get("SPARK_GRAFT_ROUND")
     if env:
         return int(env)
-    rounds = [
-        int(re.search(r"_r(\d+)\.json$", p).group(1))
+    # the driver also writes BENCH_r{N}_c8.json next to BENCH_r{N}.json:
+    # skip names that carry anything after the round number
+    matches = (
+        re.search(r"_r(\d+)\.json$", p)
         for p in glob.glob(os.path.join(REPO, "BENCH_r*.json"))
-    ]
+    )
+    rounds = [int(m.group(1)) for m in matches if m]
     return (max(rounds) + 1) if rounds else 1
 
 # Headline set: one per operator family, weighted toward the
@@ -361,10 +364,10 @@ HEADLINE_B = [
 # 1.092) the median of 159 common queries ran 1.51x slower raw, with
 # the slowdown concentrated in compute-heavy / Arrow / iterative
 # shapes the scan/shuffle pair never touches.  The round-12 bisect
-# (tools/r12_slowdown_bisect.py, results in SCALE.md "r12 slowdown
-# root-cause") showed the 16g-heap change was NOT the cause — fresh
-# 8g and 16g sessions time identically — the box itself drifted
-# shape-dependently.  CONSEQUENCE FOR HISTORY: the r07-r11
+# (results in SCALE.md "r12 slowdown root-cause") showed the 16g-heap
+# change was NOT the cause — fresh 8g and 16g sessions time
+# identically — the box itself drifted shape-dependently.
+# CONSEQUENCE FOR HISTORY: the r07-r11
 # ``value_drift_normalized`` numbers (r10's 12.101 "best ever", r11's
 # 14.759 "+22%") are 2-point-calibration artifacts and are NOT
 # comparable to the v2 numbers below; see BENCHNOTES.md for the
@@ -583,10 +586,8 @@ def box_probe(passes: int = 3) -> dict:
     stalls on this VM (one e9 pass hit 35.1 s on an idle box); a
     stalled window shows up here as ``spread`` >> 1, so contaminated
     measurements are flagged AT MEASUREMENT TIME instead of at
-    judging.  Called by main() (recorded under ``box_probe`` in the
-    artifact) and standalone by tools/r13_measure_chain.sh, which
-    retries the chain when the pre-flight spread exceeds its
-    threshold."""
+    judging.  Called by main() and recorded under ``box_probe`` in the
+    artifact."""
     import numpy as np
 
     # single-threaded, memory-bandwidth-bound (copy + reduce): BLAS

@@ -9,11 +9,16 @@ with results printed or written as parquet/csv/json.
         [--sf-dir DIR] [--out PATH] [--format parquet|csv|json]
         [--show N]
     python -m dww_data_pipeline_spark oracle QUERY
+    python -m dww_data_pipeline_spark profile QUERY [QUERY ...]
+        [--runs N] [--sf-dir DIR]
     python -m dww_data_pipeline_spark sql "SELECT ..." [--sf-dir DIR]
 
 ``run`` executes the named registry queries; with ``--out`` the
 result is written (directory per query for multi-query runs), without
-it the first ``--show`` rows print to stdout. ``sql`` registers the
+it the first ``--show`` rows print to stdout. ``profile`` times each
+query into the noop sink and prints one JSON line per query:
+``best_sec`` (min of ``--runs``), ``times`` and ``jobs_last_run``
+(Spark jobs the last run submitted). ``sql`` registers the
 test tables as views and runs an ad-hoc statement — the serving-tier
 workflow without an HTTP server in front.
 """
@@ -42,6 +47,11 @@ def _build_parser() -> argparse.ArgumentParser:
         "--format", default="parquet", choices=["parquet", "csv", "json"]
     )
     run.add_argument("--show", type=int, default=20, help="rows to print")
+
+    prof = sub.add_parser("profile", help="time queries and count their jobs")
+    prof.add_argument("queries", nargs="+", metavar="QUERY")
+    prof.add_argument("--runs", type=int, default=3)
+    prof.add_argument("--sf-dir", default="/root/testdata/sf0.01")
 
     orc = sub.add_parser("oracle", help="print a query's DuckDB oracle SQL")
     orc.add_argument("query", metavar="QUERY")
@@ -113,7 +123,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "explain" and args.query not in REGISTRY:
         print(f"unknown query {args.query!r}", file=sys.stderr)
         return 2
-    if args.cmd == "run":
+    if args.cmd in ("run", "profile"):
         unknown = [n for n in args.queries if n not in REGISTRY]
         if unknown:
             print(f"unknown queries: {', '.join(unknown)}", file=sys.stderr)
@@ -126,6 +136,18 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "explain":
         REGISTRY[args.query].spark(spark, args.sf_dir).explain(args.mode)
+        return 0
+
+    if args.cmd == "profile":
+        import json
+
+        from dww_data_pipeline_spark.session import best_of
+
+        # untimed warm-up: JVM, codegen caches and parquet footers
+        best_of(spark, REGISTRY["a10_distinct"].spark, args.sf_dir, 1)
+        for name in args.queries:
+            rec = best_of(spark, REGISTRY[name].spark, args.sf_dir, args.runs)
+            print(json.dumps({"query": name, **rec}), flush=True)
         return 0
 
     if args.cmd == "sql":

@@ -6,16 +6,14 @@ Two paths:
   one JVM-side cosine per (row, query), per-query top-k via window.
   The baseline and the verifier. Scales linearly in corpus size ×
   queries (fine when |queries| is small — the common batch case).
-* ``lsh_buckets`` / ``lsh_topk`` — random-hyperplane LSH (Charikar
-  STOC 2002; LSH framework per Indyk & Motwani, STOC 1998): each vector
-  hashed to a b-bit bucket by sign of dot with b fixed pseudo-random
-  hyperplanes (deterministic seed). Top-k runs only within matching
-  buckets (multi-probe over the query's bucket), turning the scan
-  into a bucket-pruned lookup — the 100 TB path.
+* ``ivf_topk`` — inverted-file top-k: a coarse quantizer trained on a
+  bounded driver-side sample ships as literal centroid arrays, and
+  each query scans only its ``nprobe`` nearest lists.
 
-Hyperplanes are generated driver-side from a seeded RNG and shipped
-as literal arrays (they are tiny: b × dim floats), so executors do
-zero Python work.
+Sign-LSH (random-hyperplane buckets, Charikar STOC 2002) has one
+implementation, the oracle-checked ``_spark_lsh_bucket`` of
+``plans/dedup_plans.py`` behind s4/s5; the Arrow scorers below take
+its bucket column as input.
 """
 
 from __future__ import annotations
@@ -61,11 +59,6 @@ def brute_force_topk(
     return _topk(scored, query_id, id_col, k)
 
 
-def _hyperplanes(dim: int, bits: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.RandomState(seed)
-    return rng.randn(bits, dim).astype("float64")
-
-
 def _ident(name: str) -> str:
     """Backtick-quote a column name for generated SQL, so names with
     dashes/spaces/keywords work exactly as F.col() did (the SQL-text
@@ -77,28 +70,6 @@ def _ident(name: str) -> str:
             "(the parse-once SQL builders take names, not Columns)"
         )
     return "`" + name.replace("`", "``") + "`"
-
-
-def _plane_dot_sql(vec_sql: str, plane) -> str:
-    """Spark-SQL text of the hyperplane dot (parse-once build — same
-    Py4J-lambda-cost finding as the PCA/centroid builders)."""
-    arr = ", ".join(repr(float(x)) + "D" for x in plane)
-    return (
-        f"aggregate(zip_with({_ident(vec_sql)}, array({arr}), "
-        f"(x, y) -> x * y), 0D, (a, x) -> a + x)"
-    )
-
-
-def lsh_bucket_col(vec_col: str, planes: np.ndarray):
-    """Bucket id expression: sign-bit concatenation over hyperplanes."""
-    if len(planes) == 0:
-        return F.lit(0).cast("long")
-    terms = " + ".join(
-        f"(CASE WHEN {_plane_dot_sql(vec_col, plane)} >= 0 "
-        f"THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for i, plane in enumerate(planes)
-    )
-    return F.expr(f"({terms})")
 
 
 def _kmeans_centroids(
@@ -165,8 +136,8 @@ def _pairwise_cos_arrow(
 ) -> DataFrame:
     """Rowwise cosine over candidate pairs via mapInPandas (one numpy
     einsum per Arrow batch) — the Arrow twin of the expression-path
-    cosine for the LSH/IVF scoring stage, where candidates after
-    bucket pruning still scale with the corpus. Same zero-norm → 0.0
+    cosine for the IVF scoring stage, where candidates after list
+    pruning still scale with the corpus. Same zero-norm → 0.0
     semantics and half-up 6-decimal rounding. (Bucket-grouped scoring
     with thresholds lives in ``bucket_pairs_cos_arrow``.)"""
     import numpy as np
@@ -251,89 +222,6 @@ def ivf_topk(
         )
     )
     pairs = c_assigned.join(F.broadcast(q_assigned), "_list")
-    if scorer == "arrow":
-        scored = _pairwise_cos_arrow(
-            pairs.select(query_id, id_col, vec_col, "_qv"),
-            query_id, id_col, vec_col, "_qv",
-        )
-    else:
-        scored = pairs.select(
-            query_id,
-            id_col,
-            F.round(cosine(F.col(vec_col), F.col("_qv")), 6).alias("cos"),
-        )
-    return _topk(scored, query_id, id_col, k)
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-    bits: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    query_id: str = "query_id",
-    n_probe: int = 1,
-    scorer: str = "expr",
-) -> DataFrame:
-    """Approximate top-k: candidates limited to the query's LSH
-    bucket(s).
-
-    ``n_probe`` is the recall knob — margin-aware multi-probe (Lv et
-    al., VLDB 2007): beyond the exact bucket, also probe the buckets
-    reached by flipping the ``n_probe - 1`` hyperplane bits with the
-    smallest |dot| margin (the bits most likely to be on the wrong
-    side for true neighbors). Candidate cost scales ~linearly with
-    n_probe while recall rises steeply, so at 100 TB this trades a
-    bounded extra scan for recall WITHOUT re-bucketing the corpus —
-    the probe expansion happens only on the tiny broadcast query side.
-    The unit tests measure recall against brute force rather than
-    assuming it.
-    """
-    if not 1 <= n_probe <= bits + 1:
-        raise ValueError(f"n_probe must be in [1, bits+1], got {n_probe}")
-    planes = _hyperplanes(dim, bits, seed)
-    c = corpus.withColumn("_bucket", lsh_bucket_col(vec_col, planes))
-    q = queries.select(F.col(query_id), F.col(vec_col).alias("_qv")).withColumn(
-        "_dots",
-        F.expr(
-            "array("
-            + ", ".join(_plane_dot_sql("_qv", plane) for plane in planes)
-            + ")"
-        ),
-    )
-    # bucket from the materialized dots (same sign rule as
-    # lsh_bucket_col), then the margin-ranked single-bit flips
-    q = q.withColumn(
-        "_bucket",
-        F.expr(
-            "aggregate(zip_with(_dots, sequence(0, size(_dots)-1), "
-            "(d, i) -> IF(d >= 0, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))), "
-            "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        ),
-    )
-    if n_probe > 1:
-        q = q.withColumn(
-            "_flips",
-            F.expr(
-                "transform(slice(array_sort(zip_with(transform(_dots, d -> abs(d)), "
-                f"sequence(0, size(_dots)-1), (m, i) -> struct(m, i))), 1, {n_probe - 1}), "
-                "p -> p.i)"
-            ),
-        ).withColumn(
-            "_bucket",
-            F.explode(
-                F.expr(
-                    "concat(array(_bucket), transform(_flips, "
-                    "i -> _bucket ^ shiftleft(CAST(1 AS BIGINT), i)))"
-                )
-            ),
-        )
-    # a corpus row lives in exactly one bucket and probe buckets are
-    # distinct, so no (query, id) pair appears twice — no dedup needed
-    pairs = c.join(F.broadcast(q), "_bucket")
     if scorer == "arrow":
         scored = _pairwise_cos_arrow(
             pairs.select(query_id, id_col, vec_col, "_qv"),

@@ -4,9 +4,10 @@ operators; the judge grades these as first-class alongside SURVEY §2).
 Cross-engine determinism: the oracle-checked variants derive every
 hash from md5 (identical hex output in Spark, DuckDB, Python) and
 compare minhash values as strings (min over md5-hex is a valid
-minhash and lexicographic string order is engine-portable). The
-production scale path uses xxhash64 (JVM-side, no string churn) and
-is covered by the pytest suite instead (operators/dedup.py).
+minhash and lexicographic string order is engine-portable). These
+builders are the only MinHash / SimHash / sign-LSH implementations in
+the package: the streaming and curation paths compose them rather
+than carrying their own copies.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dww_data_pipeline_spark.plans.registry import register
-from dww_data_pipeline_spark.session import local_rows_df
+from dww_data_pipeline_spark.session import drop_local_checkpoint, local_rows_df
 from dww_data_pipeline_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
@@ -492,8 +493,7 @@ def d8_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SimHash (md5-parity variant — oracle-checkable; production uses
-# xxhash64, operators/dedup.py)
+# SimHash (md5 token hashes, so the DuckDB oracle reproduces every bit)
 # ---------------------------------------------------------------------------
 
 _SH_BITS = 32
@@ -537,7 +537,7 @@ def _simhash_oracle() -> str:
     description="SimHash document signatures: per-bit majority vote over "
     "token hashes (32 bits = md5 hex-digit low bits — engine-portable); "
     "near-dups share signatures / small Hamming distance (north-star "
-    "SimHash dedup; production 64-bit xxhash64 variant in operators/dedup)",
+    "SimHash dedup)",
 )
 def d4_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -2258,6 +2258,7 @@ def _suffix_window_classes(d: DataFrame, L: int):
     c1 = p.groupBy("tok").agg(F.min("gid").alias("r"))
     r = p.join(c1, "tok").select("doc_id", "n", "pos", "gid", "r")
     w_doc = Window.partitionBy("doc_id").orderBy("pos")
+    prev = None
     for g, k in rounds:
         # positions are contiguous 1..n per doc, so lead(i*g) == the
         # rank at pos + i*g; 0 = "suffix ended" (real ids are >= 1);
@@ -2275,12 +2276,16 @@ def _suffix_window_classes(d: DataFrame, L: int):
         # previous round's — without materialization the planner
         # replans the whole chain per reference (r14 measured: the
         # static d26 plan held 32 corpus scans + 32 posexplodes and
-        # ZERO ReusedExchange nodes).  LAZY localCheckpoint: the class
-        # aggregation is a full pass over pr — its first consumer —
-        # so it lands the cache inside that job with no extra driver
-        # round-trip (the r13 §3 rule; eager measured equal here:
-        # 2.17 vs 2.10 s, HEAD 3.55 s).
-        ).localCheckpoint(eager=False)
+        # ZERO ReusedExchange nodes).  EAGER, so the round lands here
+        # and the previous round's checkpoint — which nothing reads
+        # once this one exists — is freed instead of holding storage
+        # for the life of the query.  That costs one job per round
+        # (d26/d27: +2 jobs); wall measured equal to the lazy form
+        # (d26 at sf0.1: 3.85 vs 3.73 s, 4 local cores).
+        ).localCheckpoint()
+        if prev is not None:
+            drop_local_checkpoint(prev)
+        prev = pr
         cls = pr.groupBy(*keys).agg(F.min("gid").alias("r2"))
         r = pr.join(cls, keys).select(
             "doc_id", "n", "pos", "gid", F.col("r2").alias("r")
@@ -2854,9 +2859,10 @@ def graph_ann_walk(
 ) -> DataFrame:
     """The s21 core over any (vec_id, embedding[, bucket]) relation and
     (src, dst) edge list — factored for property testing against a
-    pure-Python walk. The beam is localCheckpoint-materialized between
-    rounds (O(|q| x beam) rows — bounded) so the iterative lineage
-    stays flat instead of compounding per round.
+    pure-Python walk. Between rounds the beam (O(|q| x beam) rows —
+    bounded) is collected to the driver and re-enters as a local
+    table via ``local_rows_df``, so the iterative lineage stays flat
+    instead of compounding per round.
 
     ``seeds`` (query_id, vec_id) overrides the default global
     MIN(vec_id) entry vertex — how s22's HNSW descent chains layers:
@@ -3781,7 +3787,8 @@ def ppjoin_exact(d: DataFrame, k: int = 3) -> DataFrame:
 # bit-identical in DuckDB), serve it with the scaffolded graph walk,
 # and GATE recall@5 >= 4/5 for the fixed query panel.
 #
-# Two measured facts pin the design (tools/s25_proto.py):
+# Two measured facts pin the design (prototype sweep at sf0.01/sf0.1,
+# SCALE.md r12 clustered-recall table):
 #   * on cleanly-separated clusters the raw bucket-kNN graph — and
 #     the NN-Descent-REFINED graph, whose top-k pruning deletes
 #     cross-cluster edges — are cluster-disconnected: the s21/s22
@@ -3830,7 +3837,7 @@ def _s25_centroids() -> list[list[int]]:
     cross-cluster |cos| = 0.28 vs within-cluster ~0.96; the first
     LCG-style arithmetic recipe left two centroids at cos 0.99 —
     sign corners are the deterministic recipe that actually
-    separates (tools/s25_proto.py)."""
+    separates."""
     import hashlib
 
     return [
@@ -4138,7 +4145,7 @@ def s25_clustered_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PRODUCTION construction path (s23's capped NN-Descent), served by
 # the s21 walk contract.
 #
-# Measured first (tools/s26_proto.py, sf0.01 n=500 / sf0.1 n=2000):
+# Measured first (prototype sweep, sf0.01 n=500 / sf0.1 n=2000):
 #   * s24 as-is (refined round-2 graph, 3-round walk):  recall 0.33 —
 #     NN-Descent's top-k pruning deletes the cross-cluster edges, so
 #     the served graph is cluster-disconnected at full fixture exactly
@@ -4248,7 +4255,7 @@ FROM hits h CROSS JOIN total t"""
     "FULL-fixture deterministic clustered corpus (s25's derivation, "
     "NO probe sampling) is built by the PRODUCTION path — s23's "
     "capped NN-Descent — and served by the s21 walk (MIN entry, beam "
-    "8, top-5, 4 rounds). Measured (tools/s26_proto.py): the s24/s22 "
+    "8, top-5, 4 rounds). Measured: the s24/s22 "
     "paths as shipped score recall 0.33 at full fixture (top-k "
     "pruning deletes cross-cluster edges — cluster-disconnected, the "
     "published HNSW separated-cluster failure mode), so the "

@@ -2543,9 +2543,10 @@ def edit_distance_one_pairs(df: DataFrame, col: str) -> DataFrame:
 def _j15_variants(c: DataFrame) -> DataFrame:
     """The FastSS blocking relation: (c_name, key) variant pairs —
     deletion neighborhood for short strings, length buckets above
-    _J15_MAX_DEL_LEN.  Factored so tools/j15_candidate_study.py
-    measures the bucket-size distribution of exactly the keys the
-    join uses.
+    _J15_MAX_DEL_LEN.  Measured on content-shifted sf0.1 replicas
+    (SCALE.md, round-10 j15 disposition): candidate pairs grow 66.6x
+    at 64x data and the largest bucket stays at 39 names at every
+    scale, so the blocking needs no salting.
 
     r14 (guide §2.3): variant keys hash to fixed-width longs
     (xxhash64) before the dedup + self-join — the distinct exchanges
@@ -4275,34 +4276,40 @@ def bpe_train_segmentation_df(
     distributed loop below runs unchanged (the 100 TB posture —
     parity between the two paths is pinned by
     tests/test_pipeline_ext2.py::TestBpeDriverTrainer)."""
+    # persisted so the over-cap fallback builds ``words`` from the
+    # probe's histogram instead of re-running the corpus tokenize +
+    # histogram shuffle
     hist = (
         d.select(F.explode(spark_tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
+        .persist()
     )
     spark = d.sparkSession
     cap = _BPE_DRIVER_VOCAB_CAP
-    got = hist.limit(cap + 1).collect()
-    if len(got) <= cap:
-        merges, seg_rows = _bpe_train_driver(
-            [(r[0], r[1]) for r in got], n_merges
-        )
-        return merges, local_rows_df(
-            spark, seg_rows, "tok string, n long, seg string"
-        )
-
-    words = hist.select(
-        "tok",
-        "n",
-        F.expr(
-            "concat(' ', array_join(transform(sequence(1, "
-            "length(tok)), i -> substring(tok, i, 1)), ' '), ' ')"
-        ).alias("seg"),
-    ).persist()
+    try:
+        got = hist.limit(cap + 1).collect()
+        if len(got) <= cap:
+            merges, seg_rows = _bpe_train_driver(
+                [(r[0], r[1]) for r in got], n_merges
+            )
+            return merges, local_rows_df(
+                spark, seg_rows, "tok string, n long, seg string"
+            )
+        words = hist.select(
+            "tok",
+            "n",
+            F.expr(
+                "concat(' ', array_join(transform(sequence(1, "
+                "length(tok)), i -> substring(tok, i, 1)), ' '), ' ')"
+            ).alias("seg"),
+        ).persist()
+        n_vocab = words.count()  # materialize the histogram once
+    finally:
+        hist.unpersist(blocking=False)
     from dww_data_pipeline_spark.session import bounded_loop_shuffle
 
     try:
-        n_vocab = words.count()  # materialize the histogram once
         seg = words
         merges: list[tuple[str, str, int]] = []
         # the whole loop is vocabulary-bounded: size its shuffles from

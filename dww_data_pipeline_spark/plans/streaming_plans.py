@@ -408,15 +408,15 @@ _D7_NQUERIES = 16
 
 
 def _d7_planes_int() -> list[list[int]]:
-    """Seeded Gaussian hyperplanes (similarity._hyperplanes, seed 42)
-    quantized to integers so both engines fold them as exact BIGINT
-    literals — same plane family d7 always used, now on the exact
-    arithmetic the differential check needs."""
-    from dww_data_pipeline_spark.operators.similarity import _hyperplanes
+    """Seeded Gaussian hyperplanes (numpy RandomState(42), one
+    64-dim plane per bit) quantized to integers so both engines fold
+    them as exact BIGINT literals — same plane family d7 always used,
+    now on the exact arithmetic the differential check needs."""
+    import numpy as np
 
     return [
         [int(round(float(x) * _D7_PLANE_SCALE)) for x in plane]
-        for plane in _hyperplanes(dim=64, bits=_D7_BITS)
+        for plane in np.random.RandomState(42).randn(_D7_BITS, 64)
     ]
 
 

@@ -17,6 +17,7 @@ so the same code is correct and fast on a real multi-executor cluster:
 from __future__ import annotations
 
 import os
+import time
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -90,6 +91,10 @@ def local_rows_df(spark: SparkSession, rows, schema):
     if not isinstance(struct, StructType):
         return spark.createDataFrame(rows, schema)
     rows = list(rows)
+    # the column-wise build below reads rows positionally; dicts and
+    # other row types keep createDataFrame's own conversion
+    if not all(isinstance(r, (tuple, list)) for r in rows):
+        return spark.createDataFrame(rows, struct)
     names = [f.name for f in struct.fields]
     # fail fast on shape mismatches exactly as createDataFrame(rows,
     # schema) would (r14 advice: zip() silently truncated an over-long
@@ -123,6 +128,37 @@ def local_rows_df(spark: SparkSession, rows, schema):
             stacklevel=2,
         )
         return spark.createDataFrame(rows, struct)
+
+
+def drop_local_checkpoint(df) -> None:
+    """Free the blocks of a ``localCheckpoint()``-ed frame.
+    ``DataFrame.unpersist`` does not reach them: they belong to the
+    RDD under the frame's LogicalRDD leaf, not to the cache manager.
+    Only for a frame nothing will read again: Spark logs that the
+    truncated lineage cannot be recomputed, which is the point."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def best_of(spark: SparkSession, query, sf_dir: str, n: int) -> dict:
+    """Run the builder ``query(spark, sf_dir)`` into the noop sink
+    ``n`` times: the min wall (the first run pays codegen), every
+    run's wall, and the number of Spark jobs the last run submitted
+    (each job is a driver round-trip, the local-mode cost driver of
+    the iterative queries)."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job() -> int:
+        return max(tracker.getJobIdsForGroup(), default=-1)
+
+    times: list[float] = []
+    jobs = 0
+    for _ in range(n):
+        j0 = last_job()
+        t0 = time.perf_counter()
+        query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        times.append(round(time.perf_counter() - t0, 3))
+        jobs = last_job() - j0
+    return {"best_sec": min(times), "times": times, "jobs_last_run": jobs}
 
 
 @contextmanager

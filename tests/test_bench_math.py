@@ -197,3 +197,16 @@ class TestCalibrationPanelV2:
     def test_headline_b_is_frozen_seven(self):
         assert len(HEADLINE_B) == 7
         assert "d28_ppjoin_exact" in HEADLINE_B
+
+
+class TestCurrentRound:
+    def test_skips_suffixed_driver_artifacts(self, tmp_path, monkeypatch):
+        """The driver writes BENCH_r{N}_c8.json next to BENCH_r{N}.json;
+        the round parse must skip it instead of crashing."""
+        import bench
+
+        for name in ("BENCH_r14.json", "BENCH_r14_c8.json"):
+            (tmp_path / name).write_text("{}")
+        monkeypatch.setattr(bench, "REPO", str(tmp_path))
+        monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
+        assert bench._current_round() == 15

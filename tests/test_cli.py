@@ -63,6 +63,19 @@ class TestCli:
         assert rc == 0
         assert "5" in capsys.readouterr().out
 
+    def test_profile_prints_one_json_line_per_query(self, spark, capsys):
+        import json
+
+        rc = main(["profile", "a10_distinct", "--runs", "1", "--sf-dir", SF_DIR])
+        assert rc == 0
+        lines = [ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("{")]
+        assert len(lines) == 1
+        rec = json.loads(lines[0])
+        assert rec["query"] == "a10_distinct"
+        assert len(rec["times"]) == 1 and rec["best_sec"] == rec["times"][0]
+        assert rec["jobs_last_run"] >= 1
+        assert main(["profile", "nope"]) == 2
+
 
 class TestCliIndex:
     def test_build_query_compact(self, spark, tmp_path, capsys):

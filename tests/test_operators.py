@@ -199,48 +199,64 @@ DOCS = [
 
 
 @pytest.fixture(scope="module")
-def docs(spark):
-    return spark.createDataFrame(DOCS, ["doc_id", "text"])
+def docs_dir(spark, tmp_path_factory):
+    """DOCS as the ``documents`` table of a one-table sf directory, so
+    the registered dedup builders run on it unchanged."""
+    d = tmp_path_factory.mktemp("docs_sf")
+    spark.createDataFrame(DOCS, "doc_id long, text string").write.parquet(
+        str(d / "documents.parquet")
+    )
+    return str(d)
+
+
+def _rows(spark, name, sf_dir):
+    from dww_data_pipeline_spark.plans.registry import all_queries
+
+    return all_queries()[name](spark, sf_dir).collect()
 
 
 class TestDedup:
-    def test_exact_duplicates(self, docs):
-        out = dedup.exact_duplicates(docs, "doc_id", "text").collect()
+    def test_exact_duplicates(self, spark, docs_dir):
+        out = _rows(spark, "d1_exact_dedup_groups", docs_dir)
         assert len(out) == 1
-        assert out[0]["doc_ids"] == [1, 3]
+        assert out[0]["doc_ids"] == "1,3"
 
-    def test_dedup_exact_keeps_min_id(self, docs):
-        out = dedup.dedup_exact(docs, "doc_id", "text")
-        ids = sorted(r["doc_id"] for r in out.collect())
-        assert ids == [1, 2, 4, 5]  # 3 dropped (dup of 1)
-
-    def test_minhash_identical_docs_same_signature(self, docs):
-        sigs = {
-            r["doc_id"]: tuple(r["sig"])
-            for r in dedup.minhash_signatures(docs, "doc_id", "text").collect()
+    def test_dedup_exact_keeps_min_id(self, spark, docs_dir):
+        out = {
+            r["doc_id"]: (r["canonical_id"], r["is_duplicate"])
+            for r in _rows(spark, "d8_dedup_pipeline", docs_dir)
         }
-        assert sigs[1] == sigs[3]
-        assert sigs[1] != sigs[4]
+        assert out[3] == (1, True)  # exact dup of 1 maps to the min id
+        assert out[1] == (1, False)
+        assert out[4] == (4, False) and out[5] == (5, False)
 
-    def test_lsh_finds_exact_and_near_dups(self, docs):
+    def test_minhash_identical_docs_same_signature(self, spark, docs_dir):
+        from dww_data_pipeline_spark.plans.dedup_plans import _banded_signatures
+
+        docs = spark.read.parquet(f"{docs_dir}/documents.parquet")
+        buckets = {}
+        for r in _banded_signatures(docs).collect():
+            buckets.setdefault(r["doc_id"], set()).add((r["band"], r["bucket"]))
+        assert buckets[1] == buckets[3]
+        assert not buckets[1] & buckets[4]
+        assert 5 not in buckets  # under 3 tokens: no shingles, no signature
+
+    def test_lsh_finds_exact_and_near_dups(self, spark, docs_dir):
         pairs = {
             (r["id_a"], r["id_b"])
-            for r in dedup.minhash_lsh_pairs(docs, "doc_id", "text").collect()
+            for r in _rows(spark, "d2_minhash_lsh_pairs", docs_dir)
         }
         assert (1, 3) in pairs  # exact dup always collides
         assert (1, 4) not in pairs and (3, 4) not in pairs
 
-    def test_jaccard_verification(self, docs):
-        pairs = docs.sparkSession.createDataFrame(
-            [(1, 3), (1, 2), (1, 4)], ["id_a", "id_b"]
-        )
+    def test_jaccard_verification(self, spark, docs_dir):
         out = {
             (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in dedup.jaccard_pairs(docs, pairs, "doc_id", "text").collect()
+            for r in _rows(spark, "d3_ngram_jaccard", docs_dir)
         }
         assert out[(1, 3)] == 1.0
         assert 0.0 < out[(1, 2)] < 1.0
-        assert out[(1, 4)] == 0.0
+        assert (1, 4) not in out  # below d3's 0.1 floor
 
     def test_connected_components(self, spark):
         pairs = spark.createDataFrame(
@@ -252,14 +268,14 @@ class TestDedup:
         }
         assert out == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}  # chain collapses to min id
 
-    def test_simhash_near_dups_close_in_hamming(self, docs):
-        sh = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs, "doc_id", "text").collect()}
-        df = docs.sparkSession.createDataFrame(
-            [(sh[1], sh[3]), (sh[1], sh[2]), (sh[1], sh[4])], ["a", "b"]
-        ).select(dedup.hamming64(F.col("a"), F.col("b")).alias("d"))
-        d13, d12, d14 = [r["d"] for r in df.collect()]
-        assert d13 == 0  # identical docs
-        assert d12 < d14  # near-dup closer than unrelated
+    def test_simhash_near_dups_close_in_hamming(self, spark, docs_dir):
+        sh = {r["doc_id"]: r["simhash"] for r in _rows(spark, "d4_simhash", docs_dir)}
+
+        def hamming(a, b):
+            return bin(sh[a] ^ sh[b]).count("1")
+
+        assert hamming(1, 3) == 0  # identical docs
+        assert hamming(1, 2) < hamming(1, 4)  # near-dup closer than unrelated
 
 
 class TestSimilarity:
@@ -271,28 +287,6 @@ class TestSimilarity:
         out = similarity.brute_force_topk(emb, queries, "vec_id", "embedding", k=3)
         top1 = {r["query_id"]: r["vec_id"] for r in out.filter(F.col("rank") == 1).collect()}
         assert top1 == {0: 0, 1: 1, 2: 2}  # each vector is its own nearest
-
-    def test_lsh_topk_recall_vs_brute_force(self, spark, sf_dir):
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        queries = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding")
-        )
-        bf = similarity.brute_force_topk(emb, queries, "vec_id", "embedding", k=5)
-        lsh = similarity.lsh_topk(
-            emb, queries, "vec_id", "embedding", k=5, bits=4, dim=64
-        )
-        bf_sets = {}
-        for r in bf.collect():
-            bf_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-        lsh_sets = {}
-        for r in lsh.collect():
-            lsh_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-        # every query finds itself, and bucket pruning yields a sane subset
-        recalls = [
-            len(bf_sets[q] & lsh_sets.get(q, set())) / 5 for q in bf_sets
-        ]
-        assert all(q in lsh_sets.get(q, set()) for q in bf_sets)
-        assert sum(recalls) / len(recalls) > 0.2  # 4-bit buckets, exact probe only
 
 
 class TestMultimodal:
@@ -347,66 +341,6 @@ class TestMultimodal:
         a = extract_media_features(media, dim=4).collect()[0]["feature"]
         b = extract_media_features(media, dim=4).collect()[0]["feature"]
         assert a == b
-
-
-class TestMultiProbeLsh:
-    def _recall(self, spark, sf_dir, n_probe):
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        queries = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding")
-        )
-        bf = similarity.brute_force_topk(emb, queries, "vec_id", "embedding", k=5)
-        lsh = similarity.lsh_topk(
-            emb, queries, "vec_id", "embedding", k=5, bits=4, dim=64, n_probe=n_probe
-        )
-        bf_sets, lsh_sets = {}, {}
-        for r in bf.collect():
-            bf_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-        for r in lsh.collect():
-            lsh_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-        return sum(
-            len(bf_sets[q] & lsh_sets.get(q, set())) / 5 for q in bf_sets
-        ) / len(bf_sets)
-
-    def test_multi_probe_monotone_recall(self, spark, sf_dir):
-        # probing more buckets can only add candidates → recall must be
-        # monotone, and margin-aware probes should lift it well past
-        # the single-probe floor on real embeddings
-        # candidate sets are strict supersets as n_probe grows and the
-        # true top-k dominates every non-member, so recall is provably
-        # monotone — assert that, plus an absolute floor
-        r1 = self._recall(spark, sf_dir, n_probe=1)
-        r3 = self._recall(spark, sf_dir, n_probe=3)
-        r5 = self._recall(spark, sf_dir, n_probe=5)
-        assert r3 >= r1 and r5 >= r3
-        assert r5 >= 0.45, f"recall curve {r1}/{r3}/{r5} too low"
-
-    def test_n_probe_validation(self, spark, sf_dir):
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        q = emb.limit(1).select(F.col("vec_id").alias("query_id"), "embedding")
-        with pytest.raises(ValueError):
-            similarity.lsh_topk(emb, q, "vec_id", "embedding", bits=4, n_probe=6)
-
-
-class TestBucketCap:
-    def test_max_bucket_size_drops_mega_buckets(self, spark):
-        # 20 identical docs share every band bucket (400-pair blowup);
-        # with a cap they emit nothing, while a distinct near-dup pair
-        # in small buckets survives
-        rows = [(i, "the same exact boilerplate text repeated here") for i in range(20)]
-        # a 2-doc bucket that must SURVIVE the cap
-        rows += [
-            (100, "a genuinely unique document about spark engines and scale"),
-            (101, "a genuinely unique document about spark engines and scale"),
-        ]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        uncapped = dedup.minhash_lsh_pairs(df, "doc_id", "text")
-        capped = dedup.minhash_lsh_pairs(df, "doc_id", "text", max_bucket_size=10)
-        unc = {(r["id_a"], r["id_b"]) for r in uncapped.collect()}
-        cap = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-        assert (100, 101) in unc and (100, 101) in cap
-        assert any(a < 20 and b < 20 for a, b in unc)  # mega-bucket pairs present
-        assert not any(a < 20 and b < 20 for a, b in cap)  # ...and capped away
 
 
 class TestArrowBruteForce:

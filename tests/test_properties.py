@@ -908,6 +908,25 @@ class TestSuffixArraySpansProperties:
         got = sorted(tuple(r) for r in suffix_array_spans(df, L=4).collect())
         assert got == _sa_ref_spans(docs, 4)
 
+    def test_superseded_round_checkpoints_are_freed(self, spark):
+        """L = 50 runs two rank rounds; once the query has run, only the
+        last round's checkpoint and the window frame still hold storage."""
+        from dww_data_pipeline_spark.plans.dedup_plans import (
+            _d26_schedule,
+            _suffix_window_classes,
+        )
+
+        assert len(_d26_schedule(50)[1]) == 2
+        df = spark.createDataFrame(
+            [(i, " ".join(f"t{(i + j) % 7}" for j in range(60))) for i in range(3)],
+            "doc_id long, text string",
+        )
+        held = spark.sparkContext._jsc.getPersistentRDDs
+        before = set(held().keys())
+        win, _ = _suffix_window_classes(df, 50)
+        win.count()
+        assert len(set(held().keys()) - before) == 2
+
     def test_agrees_with_d20_on_shared_block(self, spark):
         """d26 vs d20 on the same corpus: tokens are unique WITHIN each
         doc (so every duplicate is cross-doc and both operators see it)
@@ -2081,7 +2100,7 @@ class TestS26ServingClusteredRecall:
         assert all(r["recall_overall"] >= 0.8 for r in rows)
 
     def test_refined_graph_alone_fails_the_gate(self, spark):
-        """Negative control (tools/s26_proto.py variant A): the
+        """Negative control (the s24 as-shipped graph, recall 0.33): the
         NN-Descent round-2 graph WITHOUT the scaffold union is
         cluster-disconnected on the clustered corpus — the 4-round
         walk recovers only the entry vertex's cluster, recall well

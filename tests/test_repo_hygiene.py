@@ -103,3 +103,15 @@ def test_registry_prefix_spends_sample_on_unproven():
         f"prefix ({waiting[:5]}…) while proven ones occupy prefix slots "
         f"({wasted[:5]}…) — rotate registry._PRIORITY"
     )
+
+
+def test_tools_have_no_round_scaffolding():
+    """tools/ holds parameterised tools, not per-round copies: a new
+    measurement is a mode or a query list of an existing tool (scale
+    artifacts: ``tools/scaling.py --scale-artifact``; per-query timing:
+    ``python -m dww_data_pipeline_spark profile``)."""
+    import re
+
+    pattern = re.compile(r"r\d+_|tier\d+_|_proto")
+    tools = os.listdir(os.path.join(REPO, "tools"))
+    assert [n for n in tools if pattern.search(n)] == []

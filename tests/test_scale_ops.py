@@ -203,8 +203,10 @@ class TestIvfMultiProbe:
 
 class TestArrowBucketScorer:
     def test_lsh_and_ivf_arrow_scorer_parity(self, spark, sf_dir):
-        """scorer='arrow' must rank the same candidates as the
-        expression path (cos within float32/float64 tolerance)."""
+        """ivf_topk's scorer='arrow' must rank the same candidates as
+        the expression path (cos within float32/float64 tolerance).
+        Sign-LSH has one implementation, the oracle-checked s4/s5
+        bucket, so only the IVF arm is left to compare."""
         from pyspark.sql import functions as F
 
         from dww_data_pipeline_spark.operators import similarity
@@ -213,27 +215,20 @@ class TestArrowBucketScorer:
         q = emb.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
-        cases = [
-            (similarity.lsh_topk, dict(bits=4, dim=64, n_probe=3)),
-            (similarity.ivf_topk, dict(n_lists=8, nprobe=2)),
-        ]
-        for fn, kw in cases:
-            e = sorted(
+        def ranked(scorer):
+            return sorted(
                 (r["query_id"], r["rank"], r["vec_id"], r["cos"])
-                for r in fn(
-                    emb, q, "vec_id", "embedding", k=5, scorer="expr", **kw
+                for r in similarity.ivf_topk(
+                    emb, q, "vec_id", "embedding", k=5, n_lists=8, nprobe=2,
+                    scorer=scorer,
                 ).collect()
             )
-            a = sorted(
-                (r["query_id"], r["rank"], r["vec_id"], r["cos"])
-                for r in fn(
-                    emb, q, "vec_id", "embedding", k=5, scorer="arrow", **kw
-                ).collect()
-            )
-            assert len(e) == len(a)
-            for x, y in zip(e, a):
-                assert x[:3] == y[:3], (fn.__name__, x, y)
-                assert abs(x[3] - y[3]) <= 2e-6, (fn.__name__, x, y)
+
+        e, a = ranked("expr"), ranked("arrow")
+        assert len(e) == len(a)
+        for x, y in zip(e, a):
+            assert x[:3] == y[:3], (x, y)
+            assert abs(x[3] - y[3]) <= 2e-6, (x, y)
 
 
 class TestPcaProjection:

@@ -47,6 +47,11 @@ class TestLocalRowsDf:
             local_rows_df(spark, [(1, "a", 99)], "a long, b string")
         with pytest.raises(ValueError, match="1 fields, schema has 2"):
             local_rows_df(spark, [(1,)], "a long, b string")
+        # the arity check is positional: dict rows (a missing key is a
+        # null) take createDataFrame's own conversion, as before it
+        rows = [{"a": 1, "b": "x"}, {"a": 2}]
+        got = local_rows_df(spark, rows, "a long, b string")
+        assert sorted(map(tuple, got.collect())) == [(1, "x"), (2, None)]
 
     def test_row_objects_round_trip(self, spark):
         src = spark.range(3).select(

@@ -34,10 +34,11 @@ def _current_round() -> int:
     env = os.environ.get("SPARK_GRAFT_ROUND")
     if env:
         return int(env)
-    rounds = [
-        int(re.search(r"_r(\d+)\.json$", p).group(1))
+    matches = (
+        re.search(r"_r(\d+)\.json$", p)
         for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-    ]
+    )
+    rounds = [int(m.group(1)) for m in matches if m]
     return (max(rounds) + 1) if rounds else 1
 
 

@@ -1,50 +1,57 @@
-"""Thread-scaling harness: run representative queries at increasing
-local parallelism and report speedup / parallel efficiency.
+"""Scaling harness: grow the threads or grow the data under registered
+queries and report how their wall-clock follows.
 
     python tools/scaling.py [sf_dir] [--threads 4,8,16,32] [--multiply N]
-    python tools/scaling.py [sf_dir] --data-scaling [--multiples 1,16,64]
-    python tools/scaling.py [sf_dir] --scale-artifact SCALE_r9.json \
-        [--multiples 1,16,64]   # recurring top-5 data-scaling artifact
+    python tools/scaling.py [sf_dir] --scale-artifact OUT.json \
+        [--multiples 1,16,64] [--queries q1,q2,...]
 
-Each thread count gets a FRESH SparkSession (local[N], shuffle
-partitions = N — the same sizing rule session.py applies), each query
-runs twice and keeps the min (one warm-up for codegen). Output: one
-JSON line per thread count plus a speedup table vs the smallest N.
+Every timing is ``session.best_of``: the query runs into the noop sink
+twice and keeps the min (the first run pays codegen).
 
-At sf0.1 the queries are OVERHEAD-bound (sub-2s) and scaling
-saturates; ``--multiply N`` builds a key-shifted N× replica of the
-fact tables under /tmp (dimension tables nation/region stay
-canonical so join semantics hold) and runs against that, which is
-where throughput-bound scaling becomes visible. The replica is a
-PERFORMANCE fixture only — correctness stays pinned to the driver's
-own parquet.
+Thread scaling (the default mode): each thread count gets a FRESH
+SparkSession (local[N], shuffle partitions = N — the same sizing rule
+session.py applies). Output: one JSON line per thread count plus a
+speedup table vs the smallest N. At sf0.1 the queries are
+OVERHEAD-bound (sub-2s) and scaling saturates; ``--multiply N`` runs
+against a key-shifted N× replica of the fact tables (dimension tables
+nation/region stay canonical so join semantics hold), which is where
+throughput-bound scaling becomes visible. This is the local stand-in
+for executor-count scaling on a cluster: a query whose wall-clock
+refuses to drop with N is serialized somewhere (single-partition
+window, driver loop, unsplittable Python group).
 
-``--data-scaling`` (round-6 verdict ask #3) holds threads FIXED at 32
-and grows the DATA instead: the top-wall-time queries run at 1×, 16×
-and 64× and the table reports rows/sec plus the t(64×)/t(16×) ratio
-(linear = 4.0 past the fixed-overhead floor; anything well above is a
-super-linear term the plan-shape argument missed). These replicas are
-CONTENT-shifted as well as key-shifted: a key-only replica duplicates
-every string 64×, which collapses under DISTINCT (j15 would measure
-nothing) or turns the whole corpus into one giant near-dup cluster
-(candidate generators would measure the duplication pathology, not
-data growth) — so documents.text gets per-replica token prefixes and
-customer.c_name a per-replica suffix whose cross-replica edit
-distance is >= 2 by construction. The duplication pathology itself is
-covered separately (hostile-skew studies in SCALE.md).
+Data scaling (``--scale-artifact``): threads fixed at 32, the data
+grows instead. Each query runs at every multiple of ``sf_dir`` and
+the artifact records t{m}x plus ratio_{m}x = t{m}x / t1x against the
+ideal linear ratio; a ratio well above ideal is a super-linear term
+the plan-shape argument missed. ``--queries`` names the queries; by
+default the five slowest of the newest BENCH_LOCAL_r{N}.json. When
+``d28_ppjoin_exact`` is among them the artifact also carries
+``d28_stages_v3``: PPJoin candidate counts and the wall split
+candidate-gen / suffix-filter / verify at each multiple.
 
-This is the local stand-in for executor-count scaling on a cluster:
-a query whose wall-clock refuses to drop with N is serialized
-somewhere (single-partition window, driver loop, unsplittable Python
-group) — exactly what the plan-discipline tests guard against.
+These replicas are CONTENT-shifted as well as key-shifted: a key-only
+replica duplicates every string, which collapses under DISTINCT (j15
+would measure nothing) or turns the whole corpus into one giant
+near-dup cluster (candidate generators would measure the duplication
+pathology, not data growth) — so documents.text gets per-replica
+token prefixes and customer.c_name a per-replica suffix whose
+cross-replica edit distance is >= 2 by construction. Replicas are
+PERFORMANCE fixtures only — correctness stays pinned to the original
+parquet. 64× data on an 8 GiB local JVM shows fake super-linear
+ratios from GC pressure, so any run that touches a >= 64× replica
+defaults the driver heap to 16 GiB.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # per-table integer key columns to shift per replica so keys stay
 # globally unique AND cross-table references stay consistent
@@ -59,6 +66,14 @@ _KEY_COLS = {
     "embeddings": ["vec_id"],
 }
 _KEY_OFFSET = 1_000_000_000
+
+# Largest multiple a query is timed at in the data-scaling artifact.
+# s26's production bucket-kNN init is per-bucket brute force, and on
+# its clustered corpus the LSH buckets align with the 8 planted
+# clusters, so the init grows with cluster size squared (a first s25
+# prototype of the same init measured 255 s at 16×; 64× means ~4 B
+# cosine pairs).
+_MAX_MULTIPLE = {"s26_serving_clustered_recall": 16}
 
 
 def _content_shift_cols(t: str, i: int):
@@ -129,265 +144,52 @@ def build_replica(sf_dir: str, n: int, content_shift: bool = False) -> str:
     open(os.path.join(out, "_DONE"), "w").close()
     return out
 
+
 QUERIES = [
     "a1_pricing_summary",   # scan + agg: should scale with cores
     "j1_star_join",         # broadcast star join
     "d2_minhash_lsh_pairs", # expression-heavy map + tiny shuffle
     "t2_quality_scores",    # pure per-row text expressions
     "e5_embedding_gram",    # Arrow partial-agg reduction
-    # round-4d scale paths
     "ev7_market_basket",    # in-place pair-gen + bounded pair counts
     "pr4_triangle_count",   # thresholded graph census (checkpointed)
     "c1_curation_pipeline", # composed gate -> dedup -> shard flow
     "s10_pq_ann_topk",      # PQ train + encode + ADC scan
     "j14_spatial_grid_join",  # cell-bucketed spatial candidates
-    # round-5 scale paths (m9 excluded: its clip set is bounded by
-    # design — doc_id < 150 — so replica size never changes its work)
+    # m9 is excluded: its clip set is bounded by design (doc_id < 150),
+    # so replica size never changes its work
     "d19_url_dedup",        # per-row canonicalization + key groupBy
     "t31_classifier_filter",  # vocab model train + broadcast score
     "ev14_retention_matrix",  # per-user anchors + distinct activity
-    # round-6 scale paths
     "d20_substring_spans",  # gram-fp shuffle + doc-partitioned islands
     "ev17_pattern_match",   # one user shuffle + per-row regex scans
     "dq20_hll_merge_gate",  # partial sketches + union rollup
-    # round-7 scale paths
     "t34_kneser_ney_score",   # vocab-bounded model + doc-bigram join
     "d23_cdc_chunking",       # doc-partitioned token window + chunk aggs
     "st15_stream_lm_score",   # frozen-model scoring (batch core)
 ]
 
 
-# Data-scaling study set: the top-wall-time queries from the bench,
-# each mapped to the table whose row count drives its work (rows/sec
-# denominator).
-DATA_QUERIES = {
-    "j15_edit_distance_join": "customer",
-    "s11_ivfpq_topk": "embeddings",
-    "pr6_kcore": "lineitem",
-    "d6b_components_star": "documents",
-    "pr1_supplier_pagerank": "lineitem",
-    "s10_pq_ann_topk": "embeddings",
-    "d20_substring_spans": "documents",
-    "d18_lsh_recall_gate": "documents",
-    "d11_incremental_dedup": "documents",
-    "st13_stream_incremental_dedup": "documents",
-}
-
-
-def data_scaling(sf_dir: str, multiples: list[int], threads: int = 32) -> None:
-    """Fixed threads, growing data: time the DATA_QUERIES at each
-    multiple of sf_dir (content-shifted replicas) and report rows/sec
-    plus the top-to-mid time ratio vs the ideal linear ratio."""
+def _warm_up(spark, sf_dir: str) -> None:
     from dww_data_pipeline_spark.plans.registry import all_queries
-    from dww_data_pipeline_spark.session import get_spark
-    from dww_data_pipeline_spark.sources.catalog import load_table
+    from dww_data_pipeline_spark.session import best_of
 
-    dirs = {}
-    for m in multiples:
-        dirs[m] = sf_dir if m == 1 else build_replica(sf_dir, m, content_shift=True)
-        print(f"# {m}x -> {dirs[m]}", flush=True)
-
-    spark = get_spark(f"data-scaling-{threads}", cpus=str(threads))
-    base_rows = {
-        t: load_table(spark, sf_dir, t).count()
-        for t in sorted(set(DATA_QUERIES.values()))
-    }
-    queries = all_queries()
-    queries["a10_distinct"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()  # warm-up
-    results: dict[str, dict[int, float]] = {}
-    for name in DATA_QUERIES:
-        results[name] = {}
-        for m in multiples:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                queries[name](spark, dirs[m]).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-            results[name][m] = round(best, 3)
-            print(
-                json.dumps({"query": name, "multiple": m, "sec": results[name][m]}),
-                flush=True,
-            )
-    spark.stop()
-
-    lo, hi = multiples[-2], multiples[-1]
-    ideal = hi / lo
-    print(f"\nrows/sec at fixed local[{threads}] "
-          f"(t{hi}x/t{lo}x ideal={ideal:.1f} for linear):")
-    for name, table in DATA_QUERIES.items():
-        r = results[name]
-        rps = " ".join(
-            f"{m}x={int(base_rows[table] * m / r[m]):,}/s" for m in multiples
-        )
-        ratio = r[hi] / r[lo]
-        flag = "  <-- SUPER-LINEAR" if ratio > 1.5 * ideal else ""
-        print(f"  {name:30s} {rps}  ratio={ratio:.2f}{flag}")
+    best_of(spark, all_queries()["a10_distinct"], sf_dir, 1)
 
 
-def _latest_bench_local(repo_root: str) -> tuple[str, dict]:
-    """Path + parsed JSON of the newest BENCH_LOCAL_r{N}.json."""
-    import glob
-    import re
-
-    cands = glob.glob(os.path.join(repo_root, "BENCH_LOCAL_r*.json"))
-    if not cands:
-        raise SystemExit("no BENCH_LOCAL_r*.json found — run bench.py first")
-    def rnum(p):
-        m = re.search(r"BENCH_LOCAL_r(\d+)\.json$", p)
-        return int(m.group(1)) if m else -1
-    path = max(cands, key=rnum)
-    with open(path) as f:
-        return path, json.load(f)
-
-
-def scale_artifact(
-    sf_dir: str, out_path: str, top_n: int = 5, multiples: list[int] | None = None
-) -> None:
-    """Recurring data-scaling artifact (round-7 verdict ask #2): time
-    the top-``top_n`` wall-time queries from the latest local bench at
-    each data multiple (min-of-2, fixed local[32], content-shifted
-    replicas) and write one JSON artifact — SCALE_r{N}.json — so a new
-    super-linear term is caught by a mechanical diff against last
-    round's 16x column instead of a once-per-round manual study."""
+def thread_scaling(sf_dir: str, threads: list[int]) -> None:
     from dww_data_pipeline_spark.plans.registry import all_queries
-    from dww_data_pipeline_spark.session import get_spark
-
-    multiples = multiples or [1, 16, 64]
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    bench_path, bench = _latest_bench_local(repo_root)
-    top = sorted(
-        bench["queries"].items(), key=lambda kv: -kv[1]
-    )[:top_n]
-    names = [n for n, _ in top]
-    print(f"# top-{top_n} from {os.path.basename(bench_path)}: {names}",
-          flush=True)
-
-    dirs = {}
-    for m in multiples:
-        dirs[m] = sf_dir if m == 1 else build_replica(sf_dir, m, content_shift=True)
-        print(f"# {m}x -> {dirs[m]}", flush=True)
-
-    spark = get_spark("scale-artifact", cpus="32")
-    queries = all_queries()
-    queries["a10_distinct"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()  # warm-up
-    out: dict[str, dict] = {}
-    for name in names:
-        rec: dict[str, float] = {}
-        for m in multiples:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                queries[name](spark, dirs[m]).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-            rec[f"t{m}x"] = round(best, 3)
-            print(json.dumps({"query": name, "multiple": m, "sec": rec[f"t{m}x"]}),
-                  flush=True)
-        lo, hi = multiples[0], multiples[-1]
-        for m in multiples[1:]:
-            rec[f"ratio_{m}x"] = round(rec[f"t{m}x"] / rec[f"t{lo}x"], 3)
-        rec["ratio"] = rec[f"ratio_{hi}x"]  # legacy top-tier alias
-        rec["ideal"] = round(hi / lo, 1)
-        out[name] = rec
-    spark.stop()
-
-    artifact = {
-        "source_bench": os.path.basename(bench_path),
-        "threads": 32,
-        "multiples": multiples,
-        "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        "sf": os.path.basename(sf_dir.rstrip("/")),
-        "queries": out,
-    }
-    with open(out_path, "w") as f:
-        json.dump(artifact, f, indent=1)
-        f.write("\n")
-    print(f"# wrote {out_path}", flush=True)
-
-
-def main() -> None:
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") \
-        else os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    threads = [4, 8, 16, 32]
-    multiply = 0
-    # None = "--multiples not passed"; resolved per path below.  A list
-    # literal default made an EXPLICIT --multiples 1,16,64 indistinguishable
-    # from the sentinel and silently rewrote it to [1,16] (round-8 advice).
-    multiples = None
-    argv = sys.argv[1:]
-    for i, a in enumerate(argv):
-        def _val(flag):
-            if a.startswith(flag + "="):
-                return a.split("=", 1)[1]
-            if a == flag and i + 1 < len(argv):
-                return argv[i + 1]
-            return None
-        v = _val("--threads")
-        if v is not None:
-            threads = [int(x) for x in v.split(",")]
-        v = _val("--multiply")
-        if v is not None:
-            multiply = int(v)
-        v = _val("--multiples")
-        if v is not None:
-            multiples = [int(x) for x in v.split(",")]
-    artifact_out = None
-    for i, a in enumerate(argv):
-        if a.startswith("--scale-artifact="):
-            artifact_out = a.split("=", 1)[1]
-        elif a == "--scale-artifact" and i + 1 < len(argv):
-            artifact_out = argv[i + 1]
-    # resolved defaults: the recurring artifact carries BOTH the 16x and
-    # 64x tiers from round 9 on (round-8 verdict ask #6); an explicit
-    # --multiples list is always honored verbatim.
-    mult_artifact = multiples or [1, 16, 64]
-    mult_ds = multiples or [1, 16, 64]
-    # round-7 measured finding: 64x data on the shared 8 GiB local JVM
-    # shows fake super-linear ratios from GC pressure — 16 GiB is the
-    # default for any study that touches a >= 64x replica (driver
-    # memory can only be set before the first session launches)
-    if (multiply >= 64 or ("--data-scaling" in argv and max(mult_ds) >= 64)
-            or (artifact_out and max(mult_artifact) >= 64)):
-        os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
-    if artifact_out:
-        scale_artifact(sf_dir, artifact_out, multiples=mult_artifact)
-        return
-    if "--data-scaling" in argv:
-        data_scaling(sf_dir, mult_ds)
-        return
-
-    from dww_data_pipeline_spark.plans.registry import all_queries
-    from dww_data_pipeline_spark.session import get_spark
-
-    if multiply > 1:
-        sf_dir = build_replica(sf_dir, multiply)
-        print(f"# running against {multiply}x replica: {sf_dir}")
+    from dww_data_pipeline_spark.session import best_of, get_spark
 
     results: dict[int, dict[str, float]] = {}
     for n in threads:
         spark = get_spark(f"scaling-{n}", cpus=str(n))
         queries = all_queries()
-        queries["a10_distinct"](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()  # session warm-up
-        timings: dict[str, float] = {}
-        for name in QUERIES:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                queries[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-            timings[name] = round(best, 3)
+        _warm_up(spark, sf_dir)
+        timings = {
+            name: best_of(spark, queries[name], sf_dir, 2)["best_sec"]
+            for name in QUERIES
+        }
         results[n] = timings
         print(json.dumps({"threads": n, "queries": timings, "sf_dir": sf_dir}))
         spark.stop()
@@ -399,6 +201,255 @@ def main() -> None:
             f"{n}t={results[base][name] / results[n][name]:.2f}x" for n in threads
         )
         print(f"  {name:28s} {row}")
+
+
+def _top_bench_queries(top_n: int = 5) -> tuple[str, list[str]]:
+    """The ``top_n`` slowest queries of the newest BENCH_LOCAL_r{N}.json."""
+    import glob
+    import re
+
+    def rnum(p):
+        m = re.search(r"BENCH_LOCAL_r(\d+)\.json$", p)
+        return int(m.group(1)) if m else -1
+
+    cands = [
+        p for p in glob.glob(os.path.join(REPO, "BENCH_LOCAL_r*.json"))
+        if rnum(p) >= 0
+    ]
+    if not cands:
+        raise SystemExit("no BENCH_LOCAL_r*.json found — run bench.py first")
+    path = max(cands, key=rnum)
+    with open(path) as f:
+        timings = json.load(f)["queries"]
+    top = sorted(timings, key=lambda n: -timings[n])[:top_n]
+    return os.path.basename(path), top
+
+
+def d28_stage_study(spark, sf_dir: str) -> dict:
+    """Candidate counts + wall split for the PPJoin pipeline (stages
+    mirror ppjoin_exact): candidate-gen (prefix join + length +
+    positional), suffix filter (hash-partition min-count bound),
+    array-intersect verify.  Counts force each stage, so timings are
+    stage-inclusive scan-to-count."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from dww_data_pipeline_spark.plans.text_exprs import exploded_kgrams
+    from dww_data_pipeline_spark.sources.catalog import load_table
+
+    d = load_table(spark, sf_dir, "documents")
+    sh = (
+        exploded_kgrams(d.select("doc_id", "text"), "text", 3,
+                        carry=("doc_id",), out="s")
+        .select("doc_id", "s")
+        .distinct()
+    )
+    dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
+    w = Window.partitionBy("doc_id").orderBy("df", "s")
+    ranked = (
+        sh.join(dfreq.hint("merge"), "s")
+        .withColumn("rn", F.row_number().over(w))
+        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
+    )
+    prefix = ranked.filter(
+        F.col("rn") <= F.floor(F.col("n") / 2) + 1
+    ).select("doc_id", "s", "rn", "n")
+
+    t0 = time.perf_counter()
+    cand = (
+        prefix.select(F.col("doc_id").alias("id_a"), "s",
+                      F.col("rn").alias("_ra"), F.col("n").alias("na"))
+        .join(
+            prefix.select(F.col("doc_id").alias("id_b"), "s",
+                          F.col("rn").alias("_rb"), F.col("n").alias("nb"))
+            .hint("merge"),
+            "s",
+        )
+        .filter(
+            (F.col("id_a") < F.col("id_b"))
+            & (F.greatest("na", "nb") <= 2 * F.least("na", "nb"))
+        )
+        .withColumn(
+            "_ub",
+            F.least("_ra", "_rb")
+            + F.least(F.col("na") - F.col("_ra"), F.col("nb") - F.col("_rb")),
+        )
+        .groupBy("id_a", "id_b", "na", "nb")
+        .agg(F.min("_ub").alias("_min_ub"))
+        .filter(3 * F.col("_min_ub") >= F.col("na") + F.col("nb"))
+        .select("id_a", "id_b", "na", "nb")
+    )
+    cand = cand.localCheckpoint()  # materialize: split gen from filter
+    post_positional = cand.count()
+    t_cand = time.perf_counter() - t0
+
+    t0 = time.perf_counter()
+    _K = 64
+    hists = (
+        sh.withColumn("_b", F.pmod(F.xxhash64("s"), F.lit(_K)))
+        .groupBy("doc_id")
+        .agg(
+            F.array(
+                *[
+                    F.sum(
+                        F.when(F.col("_b") == i, F.lit(1)).otherwise(F.lit(0))
+                    ).cast("int")
+                    for i in range(_K)
+                ]
+            ).alias("hist")
+        )
+    )
+    _bound = F.aggregate(
+        F.zip_with("_ha", "_hb", lambda x, y: F.least(x, y)),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+    pruned = (
+        cand.join(
+            hists.select(F.col("doc_id").alias("id_a"),
+                         F.col("hist").alias("_ha")).hint("merge"),
+            "id_a",
+        )
+        .join(
+            hists.select(F.col("doc_id").alias("id_b"),
+                         F.col("hist").alias("_hb")).hint("merge"),
+            "id_b",
+        )
+        .filter(3 * _bound >= F.col("na") + F.col("nb"))
+        .select("id_a", "id_b", "na", "nb")
+    )
+    pruned = pruned.localCheckpoint()  # materialize: split filter from verify
+    post_suffix = pruned.count()
+    t_suffix = time.perf_counter() - t0
+
+    t0 = time.perf_counter()
+    arrs = sh.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list("s")).alias("sha")
+    )
+    survivors = (
+        pruned.join(
+            arrs.select(F.col("doc_id").alias("id_a"),
+                        F.col("sha").alias("_sa")).hint("merge"),
+            "id_a",
+        )
+        .join(
+            arrs.select(F.col("doc_id").alias("id_b"),
+                        F.col("sha").alias("_sb")).hint("merge"),
+            "id_b",
+        )
+        .select(
+            "id_a", "id_b", "na", "nb",
+            F.size(F.array_intersect("_sa", "_sb")).alias("ni"),
+        )
+        .filter(3 * F.col("ni") >= F.col("na") + F.col("nb"))
+        .count()
+    )
+    t_verify = time.perf_counter() - t0
+    return {
+        "post_positional_candidates": post_positional,
+        "post_suffix_candidates": post_suffix,
+        "suffix_prune_pct": round(
+            100.0 * (1 - post_suffix / max(post_positional, 1)), 2
+        ),
+        "survivors": survivors,
+        "t_candidate_gen": round(t_cand, 3),
+        "t_suffix_filter": round(t_suffix, 3),
+        "t_verify": round(t_verify, 3),
+    }
+
+
+def scale_artifact(
+    sf_dir: str, out_path: str, multiples: list[int], names: list[str] | None
+) -> None:
+    """Time ``names`` (default: the five slowest benched queries) at
+    each data multiple, fixed local[32], and write one JSON artifact —
+    SCALE_r{N}.json — so a new super-linear term shows up as a diff
+    against the previous round's columns."""
+    from dww_data_pipeline_spark.plans.registry import all_queries
+    from dww_data_pipeline_spark.session import best_of, get_spark
+
+    artifact: dict = {
+        "threads": 32,
+        "multiples": multiples,
+        "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "sf": os.path.basename(sf_dir.rstrip("/")),
+    }
+    if not names:
+        artifact["source_bench"], names = _top_bench_queries()
+    print(f"# queries: {names}", flush=True)
+    dirs = {
+        m: sf_dir if m == 1 else build_replica(sf_dir, m, content_shift=True)
+        for m in multiples
+    }
+    for m, d in dirs.items():
+        print(f"# {m}x -> {d}", flush=True)
+
+    spark = get_spark("scale-artifact", cpus="32")
+    queries = all_queries()
+    _warm_up(spark, sf_dir)
+    tier: dict[str, dict] = {}
+    for name in names:
+        cap = _MAX_MULTIPLE.get(name, multiples[-1])
+        ms = [m for m in multiples if m <= cap]
+        rec: dict = {}
+        for m in ms:
+            rec[f"t{m}x"] = best_of(spark, queries[name], dirs[m], 2)["best_sec"]
+            print(json.dumps({"query": name, "multiple": m, "sec": rec[f"t{m}x"]}),
+                  flush=True)
+        for m in ms[1:]:
+            rec[f"ratio_{m}x"] = round(rec[f"t{m}x"] / rec[f"t{ms[0]}x"], 3)
+        if len(ms) > 1:
+            rec["ratio"] = rec[f"ratio_{ms[-1]}x"]
+        rec["ideal"] = round(ms[-1] / ms[0], 1)
+        if len(ms) < len(multiples):
+            rec["skipped"] = [m for m in multiples if m > cap]
+        tier[name] = rec
+    artifact["tier"] = tier
+    if "d28_ppjoin_exact" in names:
+        stages = artifact["d28_stages_v3"] = {}
+        for m, d in dirs.items():
+            stages[f"{m}x"] = d28_stage_study(spark, d)
+            print(json.dumps({"d28_stages_v3": m, **stages[f"{m}x"]}), flush=True)
+    spark.stop()
+
+    with open(out_path, "w") as f:
+        json.dump(artifact, f, indent=1, sort_keys=True)
+        f.write("\n")
+    print(f"# wrote {out_path}", flush=True)
+
+
+def _ints(s: str) -> list[int]:
+    return [int(x) for x in s.split(",")]
+
+
+def main() -> None:
+    sys.path.insert(0, REPO)
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument(
+        "sf_dir", nargs="?",
+        default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+    )
+    ap.add_argument("--threads", type=_ints, default=[4, 8, 16, 32])
+    ap.add_argument("--multiply", type=int, default=0)
+    ap.add_argument("--scale-artifact", metavar="OUT")
+    ap.add_argument("--multiples", type=_ints, default=[1, 16, 64])
+    ap.add_argument(
+        "--queries", type=lambda s: s.split(","), default=None,
+        help="comma list for --scale-artifact (default: top-5 benched)",
+    )
+    args = ap.parse_args()
+
+    if args.multiply >= 64 or (args.scale_artifact and max(args.multiples) >= 64):
+        # driver memory can only be set before the first session launches
+        os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    if args.scale_artifact:
+        scale_artifact(args.sf_dir, args.scale_artifact, args.multiples, args.queries)
+        return
+    sf_dir = args.sf_dir
+    if args.multiply > 1:
+        sf_dir = build_replica(sf_dir, args.multiply)
+        print(f"# running against {args.multiply}x replica: {sf_dir}")
+    thread_scaling(sf_dir, args.threads)
 
 
 if __name__ == "__main__":
